@@ -123,12 +123,17 @@ def upsert_parquet_table(
     keys: list[str],
     value_cols: list[str],
     provenance_col: str | None = "data_sources",
-) -> DataFrame:
+) -> None:
     """S7/S11: merge into a parquet-backed serving table, creating it if
     absent (reference table autovivification,
     scripts/transformation.py:57-77).  Production: Delta MERGE INTO
     (reference scripts/helperfunction.py:110-208); delta-spark is not in
     this container, so the merge is emulated on parquet.
+
+    The table holds ``keys``, ``value_cols`` and ``provenance_col`` with
+    the source's types, so the target is read with that schema pinned
+    (no footer-inference job).  Nothing is returned: read the table at
+    ``table_path`` to see the merged result.
 
     ATOMICITY BOUNDARY (what the emulation does and does not give):
 
@@ -159,7 +164,8 @@ def upsert_parquet_table(
     if os.path.isdir(table_path) and any(
         f.endswith(".parquet") for f in os.listdir(table_path)
     ):
-        target = spark.read.parquet(table_path)
+        cols = keys + value_cols + ([provenance_col] if provenance_col else [])
+        target = spark.read.schema(source.select(*cols).schema).parquet(table_path)
         merged = coalescing_merge(target, source, keys, value_cols, provenance_col)
         # Read-modify-write via temp-then-swap: writing the merge
         # straight over its own input path would delete the files the
@@ -180,7 +186,6 @@ def upsert_parquet_table(
                 F.array_sort(F.array_distinct(F.col(provenance_col))),
             )
         merged.write.mode("overwrite").parquet(table_path)
-    return spark.read.parquet(table_path)
 
 
 def upsert_versioned_table(

@@ -22,18 +22,19 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_pipeline_for_e_commerce_shop_spark.functions.scalars import event_date, ratio
 from data_pipeline_for_e_commerce_shop_spark.operators.merge import upsert_parquet_table
 from data_pipeline_for_e_commerce_shop_spark.quality.gates import (
     NULL_VALIDATION_ERROR,
     REFERENTIAL_ERROR,
+    SCHEMA_ERROR,
     DataValidationError,
-    null_violation_counts,
-    ri_violations,
 )
 from data_pipeline_for_e_commerce_shop_spark.schemas import (
     ENTITY_SCHEMAS,
@@ -42,6 +43,7 @@ from data_pipeline_for_e_commerce_shop_spark.schemas import (
     REQUIRED_COLUMNS,
 )
 from data_pipeline_for_e_commerce_shop_spark.sources.readers import (
+    CORRUPT_COL,
     read_csv_entity,
     schema_probe,
 )
@@ -49,6 +51,16 @@ from data_pipeline_for_e_commerce_shop_spark.sources.sinks import (
     write_partitioned,
     write_quarantine,
 )
+
+
+# The gates' per-row verdict: the reason a row is rejected, null when it
+# is admitted.  The first gate a row fails decides it: corrupt, then
+# nulls, then orphans in FOREIGN_KEYS order — what the sequential gates
+# assigned.  ``NULLS`` stands for the null reason, which names every
+# gated column with a null in the batch and so is known after the count.
+REASON = "reason"
+CORRUPT_REASON = "corrupt csv record"
+NULLS = "nulls"
 
 
 @dataclass
@@ -66,6 +78,21 @@ class MedallionPipeline:
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir
+        self._cached: list[DataFrame] = []
+
+    def _classify(
+        self, df: DataFrame, verdict: Column, counts: dict[str, Column]
+    ) -> tuple[DataFrame, dict[str, int]]:
+        """Cache ``df`` with each row's verdict in ``REASON`` and evaluate
+        ``counts`` in the one job that fills the cache (observed metrics
+        over a noop write), so the quarantine and the admitted rows read
+        the cache instead of the input.  ``run_batch`` releases it."""
+        df = df.withColumn(REASON, verdict).cache()
+        self._cached.append(df)
+        obs = Observation()
+        metrics = [c.alias(name) for name, c in counts.items()]
+        df.observe(obs, *metrics).write.format("noop").mode("overwrite").save()
+        return df, obs.get
 
     # ---------------------------------------------------- validation
 
@@ -77,7 +104,9 @@ class MedallionPipeline:
 
         Non-strict mode quarantines violating rows and admits the rest
         (the scalable posture); strict mode reproduces the reference's
-        fail-the-batch behavior via typed DataValidationError.
+        fail-the-batch behavior via typed DataValidationError.  One
+        classification pass counts both gates; one append quarantines
+        every rejected row.
         """
         schema = ENTITY_SCHEMAS[entity]
         # Header gate against the ACTUAL file header (S8 schema probe —
@@ -91,78 +120,102 @@ class MedallionPipeline:
                     "SCHEMA_ERROR",
                     f"{entity}: {p} missing columns {sorted(missing)}",
                 )
-        # Cache the parsed scan: Spark requires it to query
-        # _corrupt_record, and the gates make several passes over the
-        # batch anyway (read-once semantics).
-        df = read_csv_entity(self.spark, paths, schema).cache()
-
-        corrupt = df.filter(F.col("_corrupt_record").isNotNull())
-        df = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-        if corrupt.limit(1).count() > 0:
-            write_quarantine(
-                corrupt,
-                f"{self.base}/rejected/{entity}",
-                "corrupt csv record",
-                "SCHEMA_ERROR",
-            )
-
         gated = NON_NULL_COLUMNS[entity]
-        nulls = {
-            c: n for c, n in null_violation_counts(df, gated).items() if n > 0
-        }
-        if nulls:
-            if strict:
-                raise DataValidationError(
-                    NULL_VALIDATION_ERROR, f"{entity}: nulls in {nulls}"
+        corrupt = F.col(CORRUPT_COL).isNotNull()
+        # The cache is also what lets Spark query _corrupt_record.
+        df, n = self._classify(
+            read_csv_entity(self.spark, paths, schema),
+            F.when(corrupt, CORRUPT_REASON).when(
+                reduce(lambda a, b: a | b, [F.col(c).isNull() for c in gated]), NULLS
+            ),
+            {
+                CORRUPT_COL: F.count_if(corrupt),
+                **{c: F.count_if(~corrupt & F.col(c).isNull()) for c in gated},
+            },
+        )
+        nulls = {c: n[c] for c in gated if n[c] > 0}
+        reason = F.col(REASON)
+        rejected = f"{self.base}/rejected/{entity}"
+        if nulls and strict:
+            if n[CORRUPT_COL]:
+                write_quarantine(
+                    df.filter(reason == CORRUPT_REASON),
+                    rejected,
+                    CORRUPT_REASON,
+                    SCHEMA_ERROR,
                 )
-            null_cond = None
-            for c in gated:
-                cond = F.col(c).isNull()
-                null_cond = cond if null_cond is None else (null_cond | cond)
-            write_quarantine(
-                df.filter(null_cond).drop("_corrupt_record"),
-                f"{self.base}/rejected/{entity}",
-                f"nulls in required columns {sorted(nulls)}",
-                NULL_VALIDATION_ERROR,
+            raise DataValidationError(
+                NULL_VALIDATION_ERROR, f"{entity}: nulls in {nulls}"
             )
-            df = df.filter(~null_cond)
-
-        result = ValidationResult(status="SUCCESS", null_counts=nulls)
-        return df, result
+        if n[CORRUPT_COL] or nulls:
+            write_quarantine(
+                df.filter(reason.isNotNull()),
+                rejected,
+                F.when(
+                    reason == NULLS, f"nulls in required columns {sorted(nulls)}"
+                ).otherwise(reason),
+                F.when(reason == NULLS, NULL_VALIDATION_ERROR).otherwise(SCHEMA_ERROR),
+            )
+        admitted = df.filter(reason.isNull()).drop(CORRUPT_COL, REASON)
+        return admitted, ValidationResult(status="SUCCESS", null_counts=nulls)
 
     def enforce_referential_integrity(
         self, dfs: dict[str, DataFrame], strict: bool = False
     ) -> tuple[dict[str, DataFrame], dict[str, int]]:
-        """FK gates as left_anti joins (reference
-        scripts/validation.py:94-118 via collect+isin — SURVEY §4.3).
+        """FK gates (reference scripts/validation.py:94-118 via
+        collect+isin — SURVEY §4.3), one classification pass per child.
 
-        Violating child rows are quarantined; surviving rows keep FK
-        closure.  Returns cleaned dfs + violation counts.
+        A child row is orphaned on a key with no equal non-null parent
+        key (an IN-subquery, planned as a distributed existence join —
+        the left_anti semantics, without materializing keys on the
+        driver); the first FK in FOREIGN_KEYS order names it.  One
+        classification pass counts every FK; one append quarantines
+        every orphan.  Returns cleaned dfs + violation counts.
         """
         counts: dict[str, int] = {}
         out = dict(dfs)
-        for child, ckey, parent, pkey in FOREIGN_KEYS:
-            if child not in out or parent not in out:
+        for child in dict.fromkeys(c for c, _, _, _ in FOREIGN_KEYS):
+            fks = [
+                (ckey, parent, pkey)
+                for c, ckey, parent, pkey in FOREIGN_KEYS
+                if c == child and c in out and parent in out
+            ]
+            if not fks:
                 continue
-            bad = ri_violations(out[child], ckey, out[parent], pkey)
-            n = bad.count()
-            counts[f"{child}.{ckey}"] = n
-            if n > 0:
-                if strict:
+            orphans = [
+                (
+                    ~F.coalesce(
+                        F.col(ckey).isin(
+                            out[parent].select(pkey).where(F.col(pkey).isNotNull())
+                        ),
+                        F.lit(False),
+                    ),
+                    f"orphaned {ckey}",
+                )
+                for ckey, parent, pkey in fks
+            ]
+            reason = F.col(REASON)
+            df, n = self._classify(
+                out[child],
+                reduce(lambda v, o: v.when(*o), orphans[1:], F.when(*orphans[0])),
+                {ckey: F.count_if(reason == f"orphaned {ckey}") for ckey, _, _ in fks},
+            )
+            for ckey, parent, pkey in fks:
+                counts[f"{child}.{ckey}"] = n[ckey]
+                if n[ckey] and strict:
                     raise DataValidationError(
                         REFERENTIAL_ERROR,
-                        f"{child}.{ckey}: {n} rows with no parent in {parent}.{pkey}",
+                        f"{child}.{ckey}: {n[ckey]} rows with no parent"
+                        f" in {parent}.{pkey}",
                     )
+            if any(n.values()):
                 write_quarantine(
-                    bad,
+                    df.filter(reason.isNotNull()),
                     f"{self.base}/rejected/{child}",
-                    f"orphaned {ckey}",
+                    reason,
                     REFERENTIAL_ERROR,
                 )
-                parent_keys = out[parent].select(
-                    F.col(pkey).alias(ckey)
-                ).distinct()
-                out[child] = out[child].join(parent_keys, ckey, "left_semi")
+            out[child] = df.filter(reason.isNull()).drop(REASON)
         return out, counts
 
     def write_validated(self, entity: str, df: DataFrame) -> str:
@@ -183,7 +236,11 @@ class MedallionPipeline:
         path = f"{self.base}/validated/{entity}"
         if not os.path.isdir(path):
             return None
-        return self.spark.read.parquet(path)
+        # Pinned schema: no footer-inference job per read.
+        schema = T.StructType(
+            ENTITY_SCHEMAS[entity].fields + [T.StructField("dt", T.DateType())]
+        )
+        return self.spark.read.schema(schema).parquet(path)
 
     def compute_category_kpis(
         self, items: DataFrame, products: DataFrame
@@ -304,16 +361,24 @@ class MedallionPipeline:
         ``paths`` exercise the reference's partial-source branches."""
         dfs: dict[str, DataFrame] = {}
         result = ValidationResult(status="SUCCESS")
-        for entity, entity_paths in paths.items():
-            df, res = self.validate_and_load(entity, entity_paths)
-            dfs[entity] = df
-            result.null_counts.update(
-                {f"{entity}.{c}": n for c, n in res.null_counts.items()}
-            )
-        dfs, ri_counts = self.enforce_referential_integrity(dfs)
-        result.ri_violation_counts = ri_counts
-        for entity, df in dfs.items():
-            self.write_validated(entity, df)
+        first_cached = len(self._cached)
+        try:
+            for entity, entity_paths in paths.items():
+                df, res = self.validate_and_load(entity, entity_paths)
+                dfs[entity] = df
+                result.null_counts.update(
+                    {f"{entity}.{c}": n for c, n in res.null_counts.items()}
+                )
+            dfs, ri_counts = self.enforce_referential_integrity(dfs)
+            result.ri_violation_counts = ri_counts
+            for entity, df in dfs.items():
+                self.write_validated(entity, df)
+        finally:
+            # Release what this batch's gates cached, on success or failure:
+            # nothing reads it after the validated writes.
+            for df in self._cached[first_cached:]:
+                df.unpersist()
+            del self._cached[first_cached:]
 
         orders = self.read_validated("orders") if "orders" in dfs else None
         items = self.read_validated("order_items") if "order_items" in dfs else None

@@ -13,7 +13,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -34,15 +34,22 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str = "dt") -> No
 
 
 def write_quarantine(
-    bad_rows: DataFrame, path: str, reason: str, error_type: str
+    bad_rows: DataFrame, path: str, reason: str | Column, error_type: str | Column
 ) -> None:
     """S9: quarantine failing rows with reason/provenance columns —
     replaces the copy-to-rejected/-plus-JSON flow
-    (reference lambda/s3_validation.py:138-157)."""
+    (reference lambda/s3_validation.py:138-157).
+
+    ``reason`` and ``error_type`` are literals or per-row expressions
+    over ``bad_rows``; both see its columns as they are on input."""
     (
-        bad_rows.withColumn("reason", F.lit(reason))
-        .withColumn("error_type", F.lit(error_type))
-        .withColumn("rejected_at", F.current_timestamp())
+        bad_rows.withColumns(
+            {
+                "reason": F.lit(reason),
+                "error_type": F.lit(error_type),
+                "rejected_at": F.current_timestamp(),
+            }
+        )
         .write.mode("append")
         .parquet(path)
     )

@@ -8,23 +8,30 @@ SURVEY §4.3).  Status flow: pending -> processing -> done|failed with
 retry/backoff handled by Step Functions
 (stepfunction/stepfunction.json:71-79,196-204).
 
-Here the job-state table is a parquet-backed table updated with a
-CONDITIONAL transition (only one claimant can move pending->processing
-— the race is fixed by construction, single-writer read-modify-write;
-on Delta this is ``MERGE ... WHEN MATCHED AND t.status='pending'``).
+Here the job-state table is a parquet-backed table of O(batches) control
+rows, and every transition is one driver-side read-modify-write: read the
+rows (schema pinned, one job), apply the CONDITIONAL transition in Python
+(only a pending row moves to processing, so a duplicate trigger cannot
+double-claim), write them back (one job, skipped when nothing changed).
+This relies on the single-writer contract the runner already keeps: one
+controller owns the table, as for ``operators/merge.upsert_parquet_table``.
+On Delta this is ``MERGE ... WHEN MATCHED AND t.status='pending'``.
 The runner loop is the controller's FIFO probe: oldest pending batch,
 one in flight, N attempts with recorded history.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import traceback
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 BATCH_STATE_SCHEMA = T.StructType(
     [
@@ -39,6 +46,7 @@ BATCH_STATE_SCHEMA = T.StructType(
         T.StructField("last_error", T.StringType(), True),
     ]
 )
+ARROW_SCHEMA = to_arrow_schema(BATCH_STATE_SCHEMA)
 
 
 class BatchStateTable:
@@ -57,121 +65,91 @@ class BatchStateTable:
     def read(self) -> DataFrame:
         if not self._exists():
             return self.spark.createDataFrame([], BATCH_STATE_SCHEMA)
-        return self.spark.read.parquet(self.path)
+        return self.spark.read.schema(BATCH_STATE_SCHEMA).parquet(self.path)
 
-    def _overwrite(self, df: DataFrame) -> None:
-        rows = df.collect()  # job-state is control metadata: O(batches), tiny
-        out = self.spark.createDataFrame(rows, BATCH_STATE_SCHEMA)
+    def rows(self) -> list[dict]:
+        """Every state row on the driver, in one job: job-state is control
+        metadata, O(batches) and tiny.  Rows travel as Arrow both ways, so
+        timestamps are UTC-aware and the write-back is a local relation."""
+        return self.read().toArrow().to_pylist() if self._exists() else []
+
+    def _overwrite(self, rows: list[dict]) -> None:
+        out = self.spark.createDataFrame(pa.Table.from_pylist(rows, ARROW_SCHEMA))
         out.coalesce(1).write.mode("overwrite").parquet(self.path)
 
     def enqueue(self, batches: DataFrame) -> None:
         """T4: append newly closed debounce windows as pending rows,
         idempotent on batch_id (re-running the debounce can't double-
-        enqueue — the anti-join drops already-known ids)."""
-        existing = self.read().select("batch_id")
-        fresh = (
-            batches.select(
-                "batch_id",
-                "group_key",
-                "file_paths",
-                F.lit("pending").alias("status"),
-                F.coalesce(
-                    F.col("batch_start"), F.current_timestamp()
-                ).alias("created_at"),
-                F.lit(None).cast("timestamp").alias("processing_started_at"),
-                F.lit(None).cast("timestamp").alias("completed_at"),
-                F.lit(0).alias("attempts"),
-                F.lit(None).cast("string").alias("last_error"),
+        enqueue — already-known ids are dropped)."""
+        rows = self.rows()
+        known = {r["batch_id"] for r in rows}
+        fresh = batches.select(
+            "batch_id",
+            "group_key",
+            "file_paths",
+            F.coalesce(F.col("batch_start"), F.current_timestamp()).alias("created_at"),
+        ).toArrow().to_pylist()
+        new = [
+            dict(
+                b,
+                status="pending",
+                processing_started_at=None,
+                completed_at=None,
+                attempts=0,
+                last_error=None,
             )
-            .join(existing, "batch_id", "left_anti")
-        )
-        merged = self.read().unionByName(fresh)
-        self._overwrite(merged)
+            for b in fresh
+            if b["batch_id"] not in known
+        ]
+        if new:
+            self._overwrite(rows + new)
 
     def claim_next(self) -> Row | None:
         """T6: single-flight FIFO claim with a CONDITIONAL transition.
 
         If any batch is 'processing', claim nothing (reference
         controller probe, lambda/controller.py:52-61).  Otherwise move
-        the OLDEST pending row to processing — guarded on its current
-        status, so a concurrent duplicate trigger (the reference's T5/T6
-        race) cannot double-claim.
+        the OLDEST pending row (ties broken by batch_id) to processing —
+        only a pending row can move, so a concurrent duplicate trigger
+        (the reference's T5/T6 race) cannot double-claim.
         """
-        state = self.read()
-        if state.filter(F.col("status") == "processing").limit(1).count() > 0:
+        rows = self.rows()
+        if any(r["status"] == "processing" for r in rows):
             return None
-        oldest = (
-            state.filter(F.col("status") == "pending")
-            .orderBy(F.col("created_at").asc(), F.col("batch_id").asc())
-            .limit(1)
-            .collect()
-        )
-        if not oldest:
+        pending = [r for r in rows if r["status"] == "pending"]
+        if not pending:
             return None
-        bid = oldest[0]["batch_id"]
-        updated = state.withColumn(
-            "status",
-            F.when(
-                (F.col("batch_id") == bid) & (F.col("status") == "pending"),
-                F.lit("processing"),
-            ).otherwise(F.col("status")),
-        ).withColumn(
-            "processing_started_at",
-            F.when(
-                (F.col("batch_id") == bid)
-                & (F.col("processing_started_at").isNull()),
-                F.current_timestamp(),
-            ).otherwise(F.col("processing_started_at")),
-        ).withColumn(
-            "attempts",
-            F.when(F.col("batch_id") == bid, F.col("attempts") + 1).otherwise(
-                F.col("attempts")
-            ),
-        )
-        self._overwrite(updated)
-        return self.read().filter(F.col("batch_id") == bid).collect()[0]
+        row = min(pending, key=lambda r: (r["created_at"], r["batch_id"]))
+        row["status"] = "processing"
+        row["attempts"] += 1
+        if row["processing_started_at"] is None:
+            row["processing_started_at"] = dt.datetime.now(dt.timezone.utc)
+        self._overwrite(rows)
+        return Row(**row)
 
     def finish(self, batch_id: str, status: str, error: str | None = None) -> None:
         """T7: processing -> done|failed stamp (reference
         lambda/confirm_status.py:31-46)."""
-        updated = self.read().withColumn(
-            "status",
-            F.when(F.col("batch_id") == batch_id, F.lit(status)).otherwise(
-                F.col("status")
-            ),
-        ).withColumn(
-            "completed_at",
-            F.when(F.col("batch_id") == batch_id, F.current_timestamp()).otherwise(
-                F.col("completed_at")
-            ),
-        ).withColumn(
-            "last_error",
-            F.when(F.col("batch_id") == batch_id, F.lit(error)).otherwise(
-                F.col("last_error")
-            ),
-        )
-        self._overwrite(updated)
+        rows = self.rows()
+        now = dt.datetime.now(dt.timezone.utc)
+        for r in rows:
+            if r["batch_id"] == batch_id:
+                r.update(status=status, completed_at=now, last_error=error)
+        self._overwrite(rows)
 
     def requeue_failed(self, max_attempts: int = 3) -> int:
         """T9: failed batches under the attempt budget go back to
         pending (reference Step Functions Retry 3x,
         stepfunction.json:71-79)."""
-        state = self.read()
-        n = state.filter(
-            (F.col("status") == "failed") & (F.col("attempts") < max_attempts)
-        ).count()
-        if n:
-            self._overwrite(
-                state.withColumn(
-                    "status",
-                    F.when(
-                        (F.col("status") == "failed")
-                        & (F.col("attempts") < max_attempts),
-                        F.lit("pending"),
-                    ).otherwise(F.col("status")),
-                )
-            )
-        return n
+        rows = self.rows()
+        retry = [
+            r for r in rows if r["status"] == "failed" and r["attempts"] < max_attempts
+        ]
+        for r in retry:
+            r["status"] = "pending"
+        if retry:
+            self._overwrite(rows)
+        return len(retry)
 
 
 def run_until_drained(
@@ -197,7 +175,5 @@ def run_until_drained(
             table.finish(row["batch_id"], "done")
         except Exception:
             table.finish(row["batch_id"], "failed", traceback.format_exc()[-2000:])
-    state = table.read()
-    done = state.filter(F.col("status") == "done").count()
-    failed = state.filter(F.col("status") == "failed").count()
-    return {"done": done, "failed": failed}
+    statuses = [r["status"] for r in table.rows()]
+    return {"done": statuses.count("done"), "failed": statuses.count("failed")}

@@ -3,7 +3,9 @@ KPI merge, including the violation twins from FIXTURES.md §5."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -40,6 +42,30 @@ def _write(tmp, name, content):
     return p
 
 
+def _batch(raw_dir, items=ITEMS_CSV):
+    return {
+        "orders": [_write(raw_dir, "orders_part1.csv", ORDERS_CSV)],
+        "order_items": [_write(raw_dir, "order_items_part1.csv", items)],
+        "products": [_write(raw_dir, "products.csv", PRODUCTS_CSV)],
+    }
+
+
+def _jobs(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it fired), counted by
+    tagging them with a job group of their own."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    prev = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture()
 def raw_dir(tmp_path):
     d = str(tmp_path / "raw")
@@ -48,13 +74,8 @@ def raw_dir(tmp_path):
 
 
 def test_end_to_end_batch(spark, tmp_path, raw_dir):
-    paths = {
-        "orders": [_write(raw_dir, "orders_part1.csv", ORDERS_CSV)],
-        "order_items": [_write(raw_dir, "order_items_part1.csv", ITEMS_CSV)],
-        "products": [_write(raw_dir, "products.csv", PRODUCTS_CSV)],
-    }
     pipe = MedallionPipeline(spark, str(tmp_path / "zones"))
-    result = pipe.run_batch(paths)
+    result = pipe.run_batch(_batch(raw_dir))
     assert result.status == "SUCCESS"
     assert all(v == 0 for v in result.ri_violation_counts.values())
 
@@ -91,29 +112,116 @@ def test_null_gate_quarantines(spark, tmp_path, raw_dir):
 
 
 def test_null_gate_strict_raises(spark, tmp_path, raw_dir):
-    bad_orders = ORDERS_CSV + "4,,delivered,2024-03-02 10:00:00,,,,1\n"
+    bad_orders = (
+        ORDERS_CSV
+        + "4,,delivered,2024-03-02 10:00:00,,,,1\n"
+        + "notanint,13,delivered,2024-03-02 10:00:00,,,,1\n"
+    )
     pipe = MedallionPipeline(spark, str(tmp_path / "zones"))
     with pytest.raises(DataValidationError) as exc:
         pipe.validate_and_load(
             "orders", [_write(raw_dir, "orders.csv", bad_orders)], strict=True
         )
     assert exc.value.error_type == "NULL_VALIDATION_ERROR"
+    # The corrupt line is quarantined before the null gate raises.
+    rejected = spark.read.parquet(str(tmp_path / "zones/rejected/orders"))
+    assert [r["error_type"] for r in rejected.collect()] == ["SCHEMA_ERROR"]
 
 
 def test_ri_gate_quarantines_orphans(spark, tmp_path, raw_dir):
     orphan_items = ITEMS_CSV + "104,999,13,500,complete,2024-03-02 10:00:00,,,,1.00\n"
-    paths = {
-        "orders": [_write(raw_dir, "orders_part1.csv", ORDERS_CSV)],
-        "order_items": [_write(raw_dir, "order_items_part1.csv", orphan_items)],
-        "products": [_write(raw_dir, "products.csv", PRODUCTS_CSV)],
-    }
     pipe = MedallionPipeline(spark, str(tmp_path / "zones"))
-    result = pipe.run_batch(paths)
+    result = pipe.run_batch(_batch(raw_dir, orphan_items))
     assert result.ri_violation_counts["order_items.order_id"] == 1
     validated = spark.read.parquet(str(tmp_path / "zones/validated/order_items"))
     assert validated.count() == 4  # orphan excluded
     rejected = spark.read.parquet(str(tmp_path / "zones/rejected/order_items"))
     assert rejected.filter(F.col("error_type") == "REFERENTIAL_ERROR").count() == 1
+
+
+def test_gate_precedence_and_strict_ri(spark, tmp_path, raw_dir):
+    """A row is rejected once, by the first gate it fails: corrupt, then
+    nulls, then orphans in FOREIGN_KEYS order."""
+    double_orphan = "104,999,13,999,complete,2024-03-02 10:00:00,,,,1.00\n"
+    items = (
+        ITEMS_CSV
+        + double_orphan  # no parent in orders nor in products
+        # malformed sale_price AND a null order_id: corrupt wins
+        + "105,,10,500,complete,2024-03-01 10:00:00,,,,notaprice\n"
+        # null order_id only (it has no parent either): nulls win
+        + "106,,10,500,complete,2024-03-01 10:00:00,,,,1.00\n"
+    )
+    pipe = MedallionPipeline(spark, str(tmp_path / "zones"))
+    result = pipe.run_batch(_batch(raw_dir, items))
+    assert result.null_counts == {"order_items.order_id": 1}
+    assert result.ri_violation_counts == {
+        "order_items.order_id": 1,
+        "order_items.product_id": 0,
+    }
+    rejected = spark.read.parquet(str(tmp_path / "zones/rejected/order_items"))
+    got = sorted((r["id"], r["error_type"], r["reason"]) for r in rejected.collect())
+    assert got == [
+        (104, "REFERENTIAL_ERROR", "orphaned order_id"),
+        (105, "SCHEMA_ERROR", "corrupt csv record"),
+        (106, "NULL_VALIDATION_ERROR", "nulls in required columns ['order_id']"),
+    ]
+    validated = spark.read.parquet(str(tmp_path / "zones/validated/order_items"))
+    assert sorted(r["id"] for r in validated.collect()) == [100, 101, 102, 103]
+
+    strict = MedallionPipeline(spark, str(tmp_path / "strict"))
+    dfs = {
+        e: strict.validate_and_load(e, p)[0]
+        for e, p in _batch(raw_dir, ITEMS_CSV + double_orphan).items()
+    }
+    with pytest.raises(DataValidationError) as exc:
+        strict.enforce_referential_integrity(dfs, strict=True)
+    assert exc.value.error_type == "REFERENTIAL_ERROR"
+    assert "order_items.order_id: 1 rows" in exc.value.message
+
+
+def test_run_batch_releases_its_cache(spark, tmp_path, raw_dir):
+    """The frames the gates cache are freed when run_batch ends, on
+    success and on failure, and nothing else is."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    pipe = MedallionPipeline(spark, str(tmp_path / "zones"))
+    held, _ = pipe.validate_and_load(
+        "orders", [_write(raw_dir, "held.csv", ORDERS_CSV)]
+    )
+    assert held.count() == 3  # fills the cache run_batch must not touch
+    before = persistent().size()
+    pipe.run_batch(_batch(raw_dir))
+    assert persistent().size() == before
+    no_header = ITEMS_CSV.replace("sale_price", "wrong_name")
+    with pytest.raises(DataValidationError):
+        pipe.run_batch(_batch(raw_dir, no_header))
+    assert persistent().size() == before
+    assert held.count() == 3
+
+
+def test_ingest_job_budget(spark, tmp_path, raw_dir):
+    """Spark jobs per ingest step stay within budget: one classification
+    pass per entity, schema-pinned reads, and one read plus one write
+    per state transition."""
+    from data_pipeline_for_e_commerce_shop_spark.streaming.runner import (
+        BatchStateTable,
+    )
+
+    pipe = MedallionPipeline(spark, str(tmp_path / "zones"))
+    _, batch_jobs = _jobs(spark, lambda: pipe.run_batch(_batch(raw_dir)))
+    assert batch_jobs <= 20
+
+    table = BatchStateTable(spark, str(tmp_path / "state"))
+    table.enqueue(
+        spark.createDataFrame(
+            [("b1", "g1", ["a.csv"], dt.datetime(2024, 3, 1, 10))],
+            "batch_id string, group_key string, file_paths array<string>,"
+            " batch_start timestamp",
+        )
+    )
+    row, claim_jobs = _jobs(spark, table.claim_next)
+    assert row["batch_id"] == "b1" and claim_jobs <= 2
+    _, finish_jobs = _jobs(spark, lambda: table.finish("b1", "done"))
+    assert finish_jobs <= 2
 
 
 def test_missing_header_raises(spark, tmp_path, raw_dir):

@@ -196,11 +196,22 @@ def test_runner_single_flight(spark, tmp_path):
         _mk_batches(spark, [("b1", "g1", ["a.csv"], t0), ("b2", "g1", ["b.csv"], t0)])
     )
     first = table.claim_next()
-    assert first is not None and first["status"] == "processing"
+    # equal created_at: FIFO ties break on batch_id
+    assert first is not None and first["batch_id"] == "b1"
+    assert first["status"] == "processing"
     assert table.claim_next() is None  # single flight
     table.finish(first["batch_id"], "done")
     second = table.claim_next()
-    assert second is not None and second["batch_id"] != first["batch_id"]
+    assert second is not None and second["batch_id"] == "b2"
+    # a failed batch whose attempts reached the budget stays failed
+    table.finish("b2", "failed", "boom")
+    assert table.requeue_failed(max_attempts=1) == 0
+    def status(batch_id):
+        return table.read().filter(F.col("batch_id") == batch_id).first()["status"]
+
+    assert status("b2") == "failed"
+    assert table.requeue_failed(max_attempts=2) == 1
+    assert status("b2") == "pending"
 
 
 def test_stream_batch_duality(spark, sf_dir):
