@@ -182,18 +182,11 @@ class MedallionPipeline:
             ]
             if not fks:
                 continue
-            orphans = [
-                (
-                    ~F.coalesce(
-                        F.col(ckey).isin(
-                            out[parent].select(pkey).where(F.col(pkey).isNotNull())
-                        ),
-                        F.lit(False),
-                    ),
-                    f"orphaned {ckey}",
-                )
-                for ckey, parent, pkey in fks
-            ]
+            orphans = []
+            for ckey, parent, pkey in fks:
+                keys = out[parent].select(pkey).where(F.col(pkey).isNotNull())
+                has_parent = F.coalesce(F.col(ckey).isin(keys), F.lit(False))
+                orphans.append((~has_parent, f"orphaned {ckey}"))
             reason = F.col(REASON)
             df, n = self._classify(
                 out[child],
