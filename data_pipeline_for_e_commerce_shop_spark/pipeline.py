@@ -54,10 +54,10 @@ from data_pipeline_for_e_commerce_shop_spark.sources.sinks import (
 
 
 # The gates' per-row verdict: the reason a row is rejected, null when it
-# is admitted.  The first gate a row fails decides it: corrupt, then
-# nulls, then orphans in FOREIGN_KEYS order — what the sequential gates
-# assigned.  ``NULLS`` stands for the null reason, which names every
-# gated column with a null in the batch and so is known after the count.
+# is admitted.  The first gate a row fails decides it, as if the gates ran
+# one after another: corrupt, then nulls, then orphans in FOREIGN_KEYS
+# order.  ``NULLS`` stands for the null reason, which names every gated
+# column with a null in the batch and so is known after the count.
 REASON = "reason"
 CORRUPT_REASON = "corrupt csv record"
 NULLS = "nulls"
